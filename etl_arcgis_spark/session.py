@@ -52,7 +52,8 @@ def get_session(
         # -> int64 ns; ms timestamps as UTC TIMESTAMP, not NTZ
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Python Data Source filter pushdown (sources/arcgis_sim.py)
+        # Python Data Source filter pushdown (the opt-in *_pushdown formats,
+        # sources/arcgis_core.py WherePushdown)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # --- adaptive execution: runtime coalesce + skew handling ---
         .config("spark.sql.adaptive.enabled", "true")

@@ -4,14 +4,15 @@ REAL loopback HTTP instead of a local file, so pagination windows,
 token TTL expiry/refresh, and mid-page 5xx retry are exercised through
 sockets the way the reference runs them.
 
+The where grammar, schema inference, row projection and token policy
+are the shared connector core (``arcgis_core``) that ``arcgis_sim`` also
+runs; this module holds the HTTP transport and the server.
+
 Reference behaviors modeled (all public, dfpc-coe/etl-arcgis):
 
 * **Token broker** (task.ts:92-135): ``POST /api/esri`` with
   {url, username, password} answers {"auth": {token, expires,
-  referer}}; the client refreshes when the token is within the margin
-  of expiry. The reference's comment says "expires in under 5 minutes"
-  but its arithmetic (`+new Date() + 1000 * 5`, task.ts:107) yields 5
-  SECONDS — we implement the stated intent (300 s margin), not the bug.
+  referer}}; it is the mint of the shared TTL/margin token policy.
 * **Un-awaited auth quirk** (task.ts:380-386): the reference calls
   ``this.auth(...)`` WITHOUT awaiting it inside ``dumper()``, so a
   scan can fire carrying the stale ephemeral token while the refresh
@@ -22,8 +23,11 @@ Reference behaviors modeled (all public, dfpc-coe/etl-arcgis):
   than reproduced.
 * **Paged scan** (task.ts:418 ``dumper.fetch()``; esri-dump ITER):
   ``GET <layer>/query`` with resultOffset/resultRecordCount windows
-  and a server-side SQL-92 ``where`` (task.ts:406-408). Where the
-  reference pages serially, each window here is a Spark
+  and a server-side SQL-92 ``where`` (task.ts:406-408): the ``where``
+  option, plus — in the opt-in ``arcgis_http_pushdown`` format only —
+  every filter the where grammar can spell. The default ``arcgis_http``
+  format pushes nothing (see ``arcgis_core.WherePushdown`` for why).
+  Where the reference pages serially, each window here is a Spark
   InputPartition — pages read in parallel, each with its own retry.
 * **Batch submit** (task.ts:455-457): ``POST <layer>/addFeatures``
   with feature-attribute chunks.
@@ -31,16 +35,16 @@ Reference behaviors modeled (all public, dfpc-coe/etl-arcgis):
 The in-package ``SimFeatureServer`` is a loopback http.server standing
 in for ArcGIS Enterprise: token issue/expiry enforcement (ArcGIS's
 invalid-token error, surfaced as HTTP 401 carrying the ArcGIS error
-code 498), metadata endpoint for schema inference, windowed query with
-where evaluation, fault injection (fail the next N queries with 503),
-and a request log the tests assert pagination/auth sequencing against.
+code 498), metadata endpoint serving the shared field inference,
+windowed query with the shared where evaluation, fault injection (fail
+the next N queries with 503), and a request log the tests assert
+pagination/auth sequencing against.
 """
 
 from __future__ import annotations
 
 import json
 import math
-import re
 import threading
 import time
 import urllib.error
@@ -50,136 +54,30 @@ from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql.datasource import (
-    SimpleDataSourceStreamReader,
     DataSource,
     DataSourceReader,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+from pyspark.sql.types import StructType
+
+from .arcgis_core import (
+    TokenCache,
+    WherePushdown,
+    _parse_where,
+    fields_schema,
+    layer_fields,
+    projector,
 )
 
 FORMAT_NAME = "arcgis_http"
-
-_ESRI_TYPE = {
-    "esriFieldTypeOID": LongType(),
-    "esriFieldTypeInteger": LongType(),
-    "esriFieldTypeDouble": DoubleType(),
-    "esriFieldTypeString": StringType(),
-    "esriFieldTypeBoolean": BooleanType(),
-}
-_PY_ESRI = {
-    bool: "esriFieldTypeBoolean",
-    int: "esriFieldTypeInteger",
-    float: "esriFieldTypeDouble",
-    str: "esriFieldTypeString",
-}
 
 
 # --------------------------------------------------------------------------
 # server side — the loopback FeatureServer stand-in
 # --------------------------------------------------------------------------
-
-_WHERE_TOKEN = re.compile(
-    r"\s*(?:(?P<ident>[A-Za-z_][A-Za-z0-9_]*)|(?P<num>-?\d+(?:\.\d+)?)"
-    r"|(?P<str>'(?:[^']|'')*')|(?P<op><=|>=|<>|=|<|>|\(|\)|,))"
-)
-
-
-def _parse_where(where: str):
-    """Parse the SQL-92 subset the connector pushes — conjunctions of
-    ``col OP literal``, ``col IN (...)``, ``col IS NOT NULL`` — into a
-    row predicate. Raises ValueError on anything else (the server
-    rejects the request like ArcGIS would a malformed where)."""
-    toks: list[tuple[str, object]] = []
-    i = 0
-    while i < len(where):
-        if where[i].isspace():
-            i += 1
-            continue
-        m = _WHERE_TOKEN.match(where, i)
-        if not m:
-            raise ValueError(f"bad where at {where[i:]!r}")
-        if m.lastgroup == "ident":
-            toks.append(("ident", m.group("ident")))
-        elif m.lastgroup == "num":
-            n = m.group("num")
-            toks.append(("lit", float(n) if "." in n else int(n)))
-        elif m.lastgroup == "str":
-            toks.append(("lit", m.group("str")[1:-1].replace("''", "'")))
-        else:
-            toks.append(("op", m.group("op")))
-        i = m.end()
-
-    pos = 0
-
-    def peek(k=0):
-        return toks[pos + k] if pos + k < len(toks) else (None, None)
-
-    def take(kind=None, val=None):
-        nonlocal pos
-        t = peek()
-        if (kind and t[0] != kind) or (val is not None and t[1] != val):
-            raise ValueError(f"where parse error near token {t}")
-        pos += 1
-        return t
-
-    OPS = {
-        "=": lambda a, b: a is not None and a == b,
-        "<>": lambda a, b: a is not None and a != b,
-        "<": lambda a, b: a is not None and a < b,
-        ">": lambda a, b: a is not None and a > b,
-        "<=": lambda a, b: a is not None and a <= b,
-        ">=": lambda a, b: a is not None and a >= b,
-    }
-
-    def term():
-        _, name = take("ident")
-        t = peek()
-        if t == ("ident", "IS"):
-            take(); take("ident", "NOT"); take("ident", "NULL")
-            return lambda rec: rec.get(name) is not None
-        if t == ("ident", "IN"):
-            take(); take("op", "(")
-            vals = []
-            while True:
-                vals.append(take("lit")[1])
-                if peek() == ("op", ","):
-                    take()
-                else:
-                    break
-            take("op", ")")
-            vs = set(vals)
-            return lambda rec: rec.get(name) in vs
-        _, op = take("op")
-        if op not in OPS:
-            raise ValueError(f"unsupported operator {op!r}")
-        _, lit = take("lit")
-        fn = OPS[op]
-        return lambda rec: fn(rec.get(name), lit)
-
-    preds = [term()]
-    while peek() == ("ident", "AND"):
-        take()
-        preds.append(term())
-    if pos != len(toks):
-        raise ValueError(f"trailing where tokens {toks[pos:]}")
-    return lambda rec: all(p(rec) for p in preds)
 
 
 class SimFeatureServer:
@@ -299,13 +197,7 @@ class SimFeatureServer:
         return True
 
     def _metadata(self, h) -> None:
-        fields = []
-        if self.records:
-            for k, v in self.records[0].items():
-                fields.append(
-                    {"name": k, "type": _PY_ESRI.get(type(v),
-                                                     "esriFieldTypeString")}
-                )
+        fields = layer_fields(self.records)
         h._send(200, {
             "fields": fields,
             "objectIdField": fields[0]["name"] if fields else None,
@@ -366,31 +258,20 @@ def _http_json(url: str, body: dict | None = None, timeout: float = 10.0):
         return json.loads(resp.read())
 
 
-class HttpTokenBroker:
-    """Client half of task.ts:92-135: POST /api/esri, cache the token,
-    re-mint when within ``margin_s`` of expiry (the honest five
-    minutes, not the reference's accidental five seconds)."""
+class HttpTokenBroker(TokenCache):
+    """Client half of task.ts:92-135: the shared token policy with
+    ``POST /api/esri`` as its mint."""
 
     def __init__(self, base_url: str, margin_s: float = 300.0):
+        super().__init__(self._mint, margin_s)
         self.base_url = base_url
-        self.margin_s = margin_s
-        self._token: str | None = None
-        self._expires_ms = 0.0
 
-    def token(self, force: bool = False) -> str:
-        now_ms = time.time() * 1000
-        if (
-            force
-            or self._token is None
-            or now_ms + self.margin_s * 1000 >= self._expires_ms
-        ):
-            res = _http_json(
-                self.base_url + "/api/esri",
-                {"url": self.base_url, "username": "svc", "password": "x"},
-            )
-            self._token = str(res["auth"]["token"])
-            self._expires_ms = float(res["auth"]["expires"])
-        return self._token
+    def _mint(self) -> tuple[str, float]:
+        res = _http_json(
+            self.base_url + "/api/esri",
+            {"url": self.base_url, "username": "svc", "password": "x"},
+        )
+        return str(res["auth"]["token"]), float(res["auth"]["expires"])
 
 
 def _fetch_with_retry(
@@ -424,33 +305,25 @@ def _fetch_with_retry(
             raise
 
 
+def _query_page(
+    broker: HttpTokenBroker, url: str, where: str, offset: int, count: int
+) -> dict:
+    """One resultOffset/resultRecordCount window of ``where``."""
+    return _fetch_with_retry(broker, url + "/layer/query", {
+        "where": where, "resultOffset": offset, "resultRecordCount": count, "f": "json",
+    })
+
+
 @dataclass
 class HttpPagePartition(InputPartition):
     offset: int
     count: int
 
 
-_FILTER_SQL_OPS = {
-    EqualTo: "=",
-    GreaterThan: ">",
-    GreaterThanOrEqual: ">=",
-    LessThan: "<",
-    LessThanOrEqual: "<=",
-}
-
-
-def _sql_lit(v) -> str:
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    return str(v)
-
-
 class ArcGISHttpReader(DataSourceReader):
     """Paged HTTP scan: plan time asks returnCountOnly for the layer
-    cardinality (under the pushed where — the server prunes, we plan
-    fewer pages), then one InputPartition per resultOffset window
+    cardinality (under the where — the server prunes, we plan fewer
+    pages), then one InputPartition per resultOffset window
     (esri-dump ITER, task.ts:418, parallelized)."""
 
     def __init__(self, schema: StructType, options: dict):
@@ -464,24 +337,6 @@ class ArcGISHttpReader(DataSourceReader):
 
     def _where(self) -> str:
         return " AND ".join(self.where_parts) or "1=1"
-
-    def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
-        """Translate the SQL-92-expressible filter classes into where
-        fragments the server evaluates (task.ts:406-408 forwards
-        ARCGIS_QUERY the same way); everything else stays Catalyst's."""
-        for f in filters:
-            cls = type(f)
-            if cls in _FILTER_SQL_OPS and len(f.attribute) == 1:
-                self.where_parts.append(
-                    f"{f.attribute[0]} {_FILTER_SQL_OPS[cls]} {_sql_lit(f.value)}"
-                )
-            elif cls is In and len(f.attribute) == 1 and f.value:
-                vals = ", ".join(_sql_lit(v) for v in f.value)
-                self.where_parts.append(f"{f.attribute[0]} IN ({vals})")
-            elif cls is IsNotNull and len(f.attribute) == 1:
-                self.where_parts.append(f"{f.attribute[0]} IS NOT NULL")
-            else:
-                yield f
 
     def partitions(self) -> list[HttpPagePartition]:
         broker = HttpTokenBroker(self.url)
@@ -497,20 +352,19 @@ class ArcGISHttpReader(DataSourceReader):
         ]
 
     def read(self, partition: HttpPagePartition):
-        broker = HttpTokenBroker(self.url)
-        res = _fetch_with_retry(
-            broker, self.url + "/layer/query",
-            {
-                "where": self._where(),
-                "resultOffset": partition.offset,
-                "resultRecordCount": partition.count,
-                "f": "json",
-            },
+        res = _query_page(
+            HttpTokenBroker(self.url), self.url, self._where(), partition.offset, partition.count
         )
-        names = [f.name for f in self.schema.fields]
+        project = projector(self.schema)
         for feat in res.get("features", []):
-            attrs = feat.get("attributes", {})
-            yield tuple(attrs.get(n) for n in names)
+            yield project(feat.get("attributes", {}))
+
+
+class ArcGISHttpPushReader(WherePushdown, ArcGISHttpReader):
+    """Reader WITH filter pushdown (``arcgis_http_pushdown`` format):
+    pushed filters join the ``where`` the server evaluates, so page
+    planning sees the pruned count (task.ts:406-408 forwards
+    ARCGIS_QUERY the same way)."""
 
 
 @dataclass
@@ -592,24 +446,13 @@ class ArcGISHttpStreamReader(SimpleDataSourceStreamReader):
         where = f"{self.idcol} > {lo}"
         if hi is not None:
             where += f" AND {self.idcol} <= {hi}"
-        names = [f.name for f in self.schema.fields]
+        project = projector(self.schema)
         rows: list[tuple] = []
         off = 0
         while True:
-            res = _fetch_with_retry(
-                self._broker, self.url + "/layer/query",
-                {
-                    "where": where,
-                    "resultOffset": off,
-                    "resultRecordCount": self.page,
-                    "f": "json",
-                },
-            )
+            res = _query_page(self._broker, self.url, where, off, self.page)
             feats = res.get("features", [])
-            rows.extend(
-                tuple(f.get("attributes", {}).get(n) for n in names)
-                for f in feats
-            )
+            rows.extend(project(f.get("attributes", {})) for f in feats)
             if not res.get("exceededTransferLimit") or not feats:
                 return rows
             off += self.page
@@ -649,13 +492,7 @@ class ArcGISHttpDataSource(DataSource):
         """A5 over sockets: layer field metadata -> Spark schema
         (dumper.schema(), task.ts:57-82)."""
         url = self.options["url"].rstrip("/")
-        meta = _http_json(url + "/layer?f=json")
-        return StructType([
-            StructField(
-                f["name"], _ESRI_TYPE.get(f["type"], StringType())
-            )
-            for f in meta.get("fields", [])
-        ])
+        return fields_schema(_http_json(url + "/layer?f=json").get("fields", []))
 
     def reader(self, schema: StructType) -> ArcGISHttpReader:
         return ArcGISHttpReader(schema, dict(self.options))
@@ -667,5 +504,15 @@ class ArcGISHttpDataSource(DataSource):
         return ArcGISHttpStreamReader(schema, dict(self.options))
 
 
+class ArcGISHttpPushdownDataSource(ArcGISHttpDataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "arcgis_http_pushdown"
+
+    def reader(self, schema: StructType) -> ArcGISHttpPushReader:
+        return ArcGISHttpPushReader(schema, dict(self.options))
+
+
 def register(spark) -> None:
     spark.dataSource.register(ArcGISHttpDataSource)
+    spark.dataSource.register(ArcGISHttpPushdownDataSource)

@@ -9,23 +9,27 @@ through a brokered token with a TTL cache (task.ts:92-135), and submits
 feature batches back (task.ts:455-457).
 
 This source rebuilds that contract on Spark's public extension point,
-with a local JSONL file standing in for the feature server:
+with a local JSONL file standing in for the feature server. The where
+grammar, schema inference, row projection and token policy are the
+shared connector core (``arcgis_core``) that ``arcgis_http`` also runs;
+this module holds the file transport:
 
 - **Partitioned paged scan** (A1): one ``InputPartition`` per OID page
-  (``pageSize`` option) — where the reference pages *serially*, Spark
-  reads every page in parallel. At 100 TB against a real server this is
-  the difference between a connector and an engine: page ranges are the
-  unit of parallelism, retry, and locality.
-- **Filter pushdown** (A3 via ``pushFilters``): equality/range/null/In
-  filters are absorbed into the per-page read (enable
+  (``pageSize`` option), addressed by byte range — where the reference
+  pages *serially*, Spark reads every page in parallel. At 100 TB
+  against a real server this is the difference between a connector and
+  an engine: page ranges are the unit of parallelism, retry, and
+  locality.
+- **Filter pushdown** (A3, opt-in): the ``arcgis_sim_pushdown`` format
+  absorbs the filters the where grammar can spell and evaluates the
+  resulting where per page (enable
   ``spark.sql.python.filterPushdown.enabled``); everything else is
-  returned to Catalyst to evaluate above the scan.
-- **Schema inference** (A5): ``schema()`` reads the layer's field
-  metadata (first record), mirroring ``dumper.schema()``.
-- **Token broker with TTL cache** (A19): refreshed when within a
-  5-minute margin of expiry. (The reference *intends* 5 minutes but
-  computes +5 seconds — ``task.ts:107`` — a latent bug noted in
-  SURVEY.md and deliberately not reproduced.)
+  returned to Catalyst. The default ``arcgis_sim`` format pushes
+  nothing (see ``arcgis_core.WherePushdown`` for why).
+- **Schema inference** (A5): ``schema()`` infers the layer's field
+  metadata from its first 100 records, mirroring ``dumper.schema()``.
+- **Token broker with TTL cache** (A19): a local counter mint under the
+  shared 5-minute-margin policy.
 - **Batch sink** (A17): an append writer emitting one JSONL chunk per
   partition with a commit barrier (≅ chunked submit + allSettled,
   task.ts:358,457).
@@ -37,7 +41,9 @@ with a local JSONL file standing in for the feature server:
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 import time
 from dataclasses import dataclass
 from itertools import islice
@@ -45,82 +51,45 @@ from itertools import islice
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
     DataSourceStreamWriter,
+    DataSourceWriter,
+    InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+from pyspark.sql.types import StructType
+
+from .arcgis_core import (
+    TokenCache,
+    WherePushdown,
+    _parse_where,
+    fields_schema,
+    layer_fields,
+    projector,
 )
 
 FORMAT_NAME = "arcgis_sim"
 
 
-class TokenBroker:
-    """A19: brokered auth token with TTL cache (task.ts:92-135).
-
-    ``margin_s`` is honestly five minutes — the reference's comment says
-    5 minutes but its arithmetic yields 5 seconds (task.ts:107); we
-    implement the stated intent, not the bug.
-    """
+class TokenBroker(TokenCache):
+    """A19 with a local mint: token ``tok-<n>``, valid for ``ttl_s``."""
 
     def __init__(self, ttl_s: float = 3600.0, margin_s: float = 300.0):
+        super().__init__(self._mint, margin_s)
         self.ttl_s = ttl_s
-        self.margin_s = margin_s
-        self._token: str | None = None
-        self._expires: float = 0.0
         self.mint_count = 0
 
-    def token(self) -> str:
-        now = time.time()
-        if self._token is None or now + self.margin_s >= self._expires:
-            self.mint_count += 1
-            self._token = f"tok-{self.mint_count}"
-            self._expires = now + self.ttl_s
-        return self._token
+    def _mint(self) -> tuple[str, float]:
+        self.mint_count += 1
+        return f"tok-{self.mint_count}", (time.time() + self.ttl_s) * 1000
 
 
-def _infer_field(name: str, value: object) -> StructField:
-    if isinstance(value, bool):
-        return StructField(name, BooleanType())
-    if isinstance(value, int):
-        return StructField(name, LongType())
-    if isinstance(value, float):
-        return StructField(name, DoubleType())
-    return StructField(name, StringType())
-
-
-def _cell(rec: dict, name: str, string_fields: frozenset[str]):
-    """One output cell. Nested JSON values (lists/objects) whose field
-    was inferred as StringType are re-serialized — the raw Python
-    list/dict would fail Spark's type conversion at scan time."""
-    v = rec.get(name)
-    if (
-        name in string_fields
-        and v is not None
-        and not isinstance(v, (str, int, float, bool))
-    ):
-        return json.dumps(v, separators=(",", ":"), sort_keys=True)
-    return v
-
-
-def _string_fields(schema: StructType) -> frozenset[str]:
-    return frozenset(f.name for f in schema.fields if isinstance(f.dataType, StringType))
+def _byte_range_records(path: str, start: int, end: int):
+    """The records of the layer lines in the byte range [start, end)
+    (both offsets at line starts)."""
+    with open(path, "rb") as fh:
+        fh.seek(start)
+        return map(json.loads, fh.read(end - start).splitlines())
 
 
 @dataclass
@@ -135,26 +104,15 @@ class PagePartition(InputPartition):
 
 
 class ArcGISSimReader(DataSourceReader):
-    """Reader WITHOUT filter pushdown — the default, reuse-safe.
-
-    Why pushdown is opt-in (measured on Spark 4.1.2, see
-    tests/test_datasource.py::test_union_two_scans_same_relation):
-    when one query scans the SAME relation twice with DIFFERENT pushed
-    filters (e.g. the two branches of a union), Spark deduplicates the
-    two BatchScans even though their Python-side pushed-filter state
-    differs — the JVM scan-equality check cannot see it — and both
-    branches read one branch's filtered output: silent wrong results.
-    The ``arcgis_sim_pushdown`` format enables pushdown for single-scan
-    queries (the reference's actual access pattern, one ARCGIS_QUERY per
-    scheduled pull).
-    """
+    """Reader WITHOUT filter pushdown — the default, reuse-safe; the
+    ``arcgis_sim_pushdown`` format mixes in ``WherePushdown``."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.options = options
         self.path = options["path"]
         self.page_size = int(options.get("pagesize", 1000))
-        self.pushed: list[Filter] = []
+        self.where_parts: list[str] = []
         # simulated auth handshake at plan time (A19)
         self._token = TokenBroker().token()
 
@@ -180,35 +138,12 @@ class ArcGISSimReader(DataSourceReader):
         ]
         return parts or [PagePartition(0, 0)]
 
-    def _matches(self, rec: dict) -> bool:
-        for f in self.pushed:
-            v = rec.get(f.attribute[0])
-            if isinstance(f, EqualTo):
-                ok = v == f.value
-            elif isinstance(f, GreaterThan):
-                ok = v is not None and v > f.value
-            elif isinstance(f, GreaterThanOrEqual):
-                ok = v is not None and v >= f.value
-            elif isinstance(f, LessThan):
-                ok = v is not None and v < f.value
-            elif isinstance(f, LessThanOrEqual):
-                ok = v is not None and v <= f.value
-            elif isinstance(f, In):
-                ok = v in f.value
-            elif isinstance(f, IsNotNull):
-                ok = v is not None
-            else:  # pragma: no cover
-                ok = True
-            if not ok:
-                return False
-        return True
-
     def read(self, partition: PagePartition):
         names = [f.name for f in self.schema.fields]
         top_group = self.options.get("topgroup")
         top_order = self.options.get("toporder")
         top_count = int(self.options.get("topcount", 0) or 0)
-        rows = self._page_rows(partition, names)
+        rows = self._page_rows(partition)
         if not (top_group and top_order and top_count > 0):
             yield from rows
             return
@@ -226,37 +161,16 @@ class ArcGISSimReader(DataSourceReader):
             members.sort(key=lambda r: (r[oi] is not None, r[oi]), reverse=True)
             yield from members[:top_count]
 
-    def _page_rows(self, partition: PagePartition, names: list):
-        sf = _string_fields(self.schema)
-        with open(self.path, "rb") as fh:
-            fh.seek(partition.byte_start)
-            remaining = partition.byte_end - partition.byte_start
-            while remaining > 0:
-                line = fh.readline()
-                if not line:
-                    break
-                remaining -= len(line)
-                rec = json.loads(line)
-                if self._matches(rec):
-                    yield tuple(_cell(rec, n, sf) for n in names)
+    def _page_rows(self, partition: PagePartition):
+        recs = _byte_range_records(self.path, partition.byte_start, partition.byte_end)
+        if self.where_parts:
+            # the same compiled where the loopback server evaluates
+            recs = filter(_parse_where(" AND ".join(self.where_parts)), recs)
+        return map(projector(self.schema), recs)
 
 
-class ArcGISSimPushReader(ArcGISSimReader):
-    """Reader WITH filter pushdown (``arcgis_sim_pushdown`` format) —
-    absorbs the SQL-92-expressible filter classes into the paged read,
-    yields the rest back to Catalyst. Safe when each relation is scanned
-    once per query (see ArcGISSimReader docstring for the multi-scan
-    hazard)."""
-
-    def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
-        for f in filters:
-            if isinstance(
-                f,
-                (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In, IsNotNull),
-            ) and len(f.attribute) == 1:
-                self.pushed.append(f)
-            else:
-                yield f  # unsupported -> evaluated by Spark above the scan
+class ArcGISSimPushReader(WherePushdown, ArcGISSimReader):
+    """Reader WITH filter pushdown (``arcgis_sim_pushdown`` format)."""
 
 
 @dataclass
@@ -264,6 +178,14 @@ class ChunkCommit(WriterCommitMessage):
     path: str
     rows: int
     partition: int
+
+
+def _remove_matching(pattern: str) -> None:
+    for stale in glob.glob(pattern):
+        try:
+            os.remove(stale)
+        except OSError:
+            pass
 
 
 def _sweep_stale_tmp(out_dir: str) -> None:
@@ -276,33 +198,22 @@ def _sweep_stale_tmp(out_dir: str) -> None:
     has finished (the next epoch cannot start first), so any ``.tmp-*``
     file still present there is garbage by construction — identifiable
     by prefix, safe to unlink."""
-    import glob as _glob
-    import os
-
-    for stale in _glob.glob(f"{out_dir}/.tmp-*"):
-        try:
-            os.remove(stale)
-        except OSError:
-            pass
+    _remove_matching(f"{out_dir}/.tmp-*")
 
 
-class ArcGISSimWriter(DataSourceWriter):
-    """A17: append-only batch sink — one JSONL chunk per partition
-    (chunked submit), commit barrier == Promise.allSettled
-    (task.ts:358).
-
-    Tasks write to ``.tmp-`` attempt files; only ``commit()`` renames
-    them to their final ``chunk-*.jsonl`` names, and ``abort()`` deletes
-    them — so a failed or partially-executed job never leaves
-    committed-looking output in the target directory.
-    """
+class _JsonlChunkSink:
+    """The task and abort halves shared by the batch and streaming
+    sinks: each task writes one JSONL chunk to a ``.tmp-`` attempt file
+    (only the sink's commit promotes it to a ``chunk-*.jsonl`` name), and
+    discarding an attempt deletes its file and sweeps stale ones — so a
+    failed or partially-executed job never leaves committed-looking
+    output in the target directory."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.out_dir = options["path"]
 
     def write(self, iterator) -> ChunkCommit:
-        import os
         import uuid
 
         from pyspark import TaskContext
@@ -318,9 +229,23 @@ class ArcGISSimWriter(DataSourceWriter):
                 n += 1
         return ChunkCommit(path=tmp, rows=n, partition=pid)
 
-    def commit(self, messages) -> None:
-        import os
+    def _discard(self, messages) -> None:
+        for m in messages:
+            if m is None:
+                continue
+            try:
+                os.remove(m.path)
+            except OSError:
+                pass
+        _sweep_stale_tmp(self.out_dir)
 
+
+class ArcGISSimWriter(_JsonlChunkSink, DataSourceWriter):
+    """A17: append-only batch sink — one JSONL chunk per partition
+    (chunked submit), commit barrier == Promise.allSettled
+    (task.ts:358)."""
+
+    def commit(self, messages) -> None:
         for m in messages:
             final = f"{self.out_dir}/chunk-{m.partition:05d}.jsonl"
             os.replace(m.path, final)
@@ -329,17 +254,10 @@ class ArcGISSimWriter(DataSourceWriter):
         print(f"ok - submitted {total} features in {len(messages)} chunks")
 
     def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            try:
-                os.remove(m.path)
-            except OSError:
-                pass
-        _sweep_stale_tmp(self.out_dir)
+        self._discard(messages)
 
 
-class ArcGISSimStreamWriter(DataSourceStreamWriter):
+class ArcGISSimStreamWriter(_JsonlChunkSink, DataSourceStreamWriter):
     """A17 as a STREAMING sink — the reference's outgoing flow
     (task.ts:155-361: SQS micro-batch -> chunked submit) on Spark's
     stream-writer extension point. Each micro-batch writes one JSONL
@@ -353,42 +271,12 @@ class ArcGISSimStreamWriter(DataSourceStreamWriter):
     re-posts the whole FeatureCollection).
     """
 
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.out_dir = options["path"]
-
-    def write(self, iterator) -> ChunkCommit:
-        import os
-        import uuid
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.out_dir, exist_ok=True)
-        tmp = f"{self.out_dir}/.tmp-{uuid.uuid4().hex}-{pid:05d}"
-        names = [f.name for f in self.schema.fields]
-        n = 0
-        with open(tmp, "w") as fh:
-            for row in iterator:
-                fh.write(json.dumps(dict(zip(names, row))) + "\n")
-                n += 1
-        return ChunkCommit(path=tmp, rows=n, partition=pid)
-
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        import glob as _glob
-        import os
-
         marker = f"{self.out_dir}/_committed_{batchId}"
         if os.path.exists(marker):
             # replayed epoch: the batch is already durable — drop the
             # duplicate attempt files, commit nothing
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(m.path)
-                    except OSError:
-                        pass
-            _sweep_stale_tmp(self.out_dir)
+            self._discard(messages)
             return
         # No marker => the epoch is NOT durable yet, whatever partial
         # state a crashed earlier attempt left behind. Delete any
@@ -396,11 +284,7 @@ class ArcGISSimStreamWriter(DataSourceStreamWriter):
         # legitimately produce a different partition count, and a stale
         # promoted chunk from the dead attempt would otherwise survive
         # as a duplicate orphan (round-3 ADVICE finding).
-        for stale in _glob.glob(f"{self.out_dir}/chunk-{batchId:06d}-*.jsonl"):
-            try:
-                os.remove(stale)
-            except OSError:
-                pass
+        _remove_matching(f"{self.out_dir}/chunk-{batchId:06d}-*.jsonl")
         total = 0
         for m in messages:
             if m is None:
@@ -418,16 +302,7 @@ class ArcGISSimStreamWriter(DataSourceStreamWriter):
         print(f"ok - submitted {total} features (batch {batchId})")
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            try:
-                os.remove(m.path)
-            except OSError:
-                pass
-        _sweep_stale_tmp(self.out_dir)
+        self._discard(messages)
 
 
 class ArcGISSimStreamReader(SimpleDataSourceStreamReader):
@@ -449,7 +324,6 @@ class ArcGISSimStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
-        self.names = [f.name for f in schema.fields]
         self.path = options["path"]
         self.page_size = int(options.get("pagesize", 1000))
         self.pages_per_batch = int(options.get("pagesperbatch", 1))
@@ -459,35 +333,16 @@ class ArcGISSimStreamReader(SimpleDataSourceStreamReader):
         return {"byte": 0}
 
     def read(self, start: dict):
-        rows = []
         with open(self.path, "rb") as fh:
             fh.seek(start["byte"])
             budget = self.page_size * self.pages_per_batch
-            while budget > 0:
-                line = fh.readline()
-                if not line:
-                    break
-                rows.append(json.loads(line))
-                budget -= 1
+            recs = [json.loads(line) for line in islice(fh, budget)]
             end = fh.tell()
-        sf = _string_fields(self.schema)
-        return (
-            iter([tuple(_cell(r, n, sf) for n in self.names) for r in rows]),
-            {"byte": end},
-        )
+        return map(projector(self.schema), recs), {"byte": end}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        sf = _string_fields(self.schema)
-        with open(self.path, "rb") as fh:
-            fh.seek(start["byte"])
-            remaining = end["byte"] - start["byte"]
-            while remaining > 0:
-                line = fh.readline()
-                if not line:
-                    break
-                remaining -= len(line)
-                rec = json.loads(line)
-                yield tuple(_cell(rec, n, sf) for n in self.names)
+        recs = _byte_range_records(self.path, start["byte"], end["byte"])
+        return map(projector(self.schema), recs)
 
 
 class ArcGISSimDataSource(DataSource):
@@ -497,17 +352,9 @@ class ArcGISSimDataSource(DataSource):
 
     def schema(self) -> StructType:
         """A5: layer schema from field metadata (≅ dumper.schema(),
-        task.ts:78) — inferred over the first 100 records, keeping
-        first-seen key order and the first NON-NULL value per key, so a
-        null or missing field in record 1 neither pins the column to
-        string nor drops it."""
-        samples: dict[str, object] = {}
+        task.ts:78), inferred from the layer's first records."""
         with open(self.options["path"]) as fh:
-            for line in islice(fh, 100):
-                for k, v in json.loads(line).items():
-                    if k not in samples or samples[k] is None:
-                        samples[k] = v
-        return StructType([_infer_field(k, v) for k, v in samples.items()])
+            return fields_schema(layer_fields(json.loads(line) for line in fh))
 
     def reader(self, schema: StructType) -> ArcGISSimReader:
         return ArcGISSimReader(schema, dict(self.options))

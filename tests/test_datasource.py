@@ -270,6 +270,25 @@ def test_nested_json_fields_serialize_as_strings(spark, tmp_path):
     assert got[3][0] == '{"type":"Point","xy":[3.0,4.0]}'
 
 
+def test_pushdown_on_nested_field_compares_canonical_json(spark, tmp_path):
+    """A filter pushed on a nested field is evaluated against the same
+    canonical JSON string the scan returns, so the pushdown read keeps
+    exactly the rows the unpushed read keeps."""
+    path = tmp_path / "nested.jsonl"
+    rows = [
+        {"fid": 1, "geom": {"xy": [1.0, 2.0], "type": "Point"}},
+        {"fid": 2, "geom": {"type": "Line", "xy": []}},
+        {"fid": 3, "geom": None},
+    ]
+    path.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    register(spark)
+    point = '{"type":"Point","xy":[1.0,2.0]}'
+    for fmt in ("arcgis_sim", "arcgis_sim_pushdown"):
+        df = spark.read.format(fmt).option("path", str(path)).load()
+        assert [r.fid for r in df.filter(F.col("geom") == point).collect()] == [1], fmt
+        assert [r.fid for r in df.filter(F.col("geom").isin(point, "x")).collect()] == [1], fmt
+
+
 def test_stream_writer_end_to_end_and_idempotent_replay(spark, layer_file, tmp_path):
     """A17 streaming sink: a micro-batch stream lands every row exactly
     once in batch-stamped JSONL chunks, and a replayed commit of the

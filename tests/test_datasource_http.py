@@ -12,7 +12,10 @@ import urllib.error
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNotNull, LessThan
 
+from etl_arcgis_spark.sources import arcgis_sim
+from etl_arcgis_spark.sources.arcgis_core import filter_sql
 from etl_arcgis_spark.sources.arcgis_http import (
 
     HttpTokenBroker,
@@ -102,8 +105,12 @@ def test_where_pushdown_server_side(spark, server):
     evaluates — page planning sees the pruned count."""
     srv, url = server
     register(spark)
-    df = _reader(spark, url, pagesize=100).filter(
-        (F.col("speed") > 40) & (F.col("callsign") == "unit-3")
+    df = (
+        spark.read.format("arcgis_http_pushdown")
+        .option("url", url)
+        .option("pagesize", 100)
+        .load()
+        .filter((F.col("speed") > 40) & (F.col("callsign") == "unit-3"))
     )
     rows = df.collect()
     assert rows
@@ -117,6 +124,98 @@ def test_where_pushdown_server_side(spark, server):
     assert any("callsign = 'unit-3'" in (w or "") for w in wheres)
     # pruned count -> a single page partition
     assert df.rdd.getNumPartitions() == 1
+
+
+def test_pushdown_approximate_numeric_literal(spark, server):
+    """A float filter the translator spells in exponent form (``1e-05``)
+    must parse server-side rather than fail the read with a 400."""
+    srv, url = server
+    register(spark)
+    df = (
+        spark.read.format("arcgis_http_pushdown")
+        .option("url", url)
+        .load()
+        .filter(F.col("speed") > 1e-5)
+    )
+    assert sorted(r.oid for r in df.collect()) == [o for o in range(250) if o % 50 > 0]
+    wheres = {q.get("where") for (_, p, q) in srv.request_log if p == "/layer/query"}
+    assert any("speed > 1e-05" in (w or "") for w in wheres), wheres
+
+
+def test_union_two_scans_same_relation(spark, server):
+    """Twin of the arcgis_sim regression: the default format pushes
+    nothing, so the two filtered branches of a union over one relation
+    each return their own rows."""
+    _, url = server
+    register(spark)
+    df = _reader(spark, url)
+    u = df.filter(F.col("callsign") == "unit-1").unionByName(
+        df.filter(F.col("callsign") == "unit-2")
+    )
+    got = sorted(r["oid"] for r in u.collect())
+    assert got == sorted(o for o in range(250) if o % 7 in (1, 2))
+
+
+def test_default_formats_read_in_vanilla_session(spark, server, layer_file):
+    """With ``spark.sql.python.filterPushdown.enabled`` at its default
+    (false), as in a session the connector does not configure, both
+    default formats read and filter correctly."""
+    _, url = server
+    register(spark)
+    arcgis_sim.register(spark)
+    key = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        want = [o for o in range(250) if o % 50 > 40]
+        for df in (
+            _reader(spark, url),
+            spark.read.format("arcgis_sim").option("path", layer_file).load(),
+        ):
+            assert sorted(r.oid for r in df.filter(F.col("speed") > 40).collect()) == want
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_nested_json_fields_serialize_as_strings(spark, tmp_path):
+    """Twin of the arcgis_sim test: nested attribute values arrive as
+    canonical JSON strings (sorted keys, compact), not Python reprs."""
+    path = tmp_path / "nested.jsonl"
+    rows = [
+        {"fid": 1, "geom": {"type": "Point", "xy": [1.0, 2.0]}, "tags": ["x", "y"]},
+        {"fid": 2, "geom": None, "tags": []},
+        {"fid": 3, "geom": {"xy": [3.0, 4.0], "type": "Point"}, "tags": None},
+    ]
+    path.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    srv = SimFeatureServer(str(path))
+    url = srv.start()
+    try:
+        register(spark)
+        got = {r["fid"]: (r["geom"], r["tags"]) for r in _reader(spark, url).collect()}
+    finally:
+        srv.stop()
+    assert got == {
+        1: ('{"type":"Point","xy":[1.0,2.0]}', '["x","y"]'),
+        2: (None, "[]"),
+        3: ('{"type":"Point","xy":[3.0,4.0]}', None),
+    }
+
+
+def test_schema_inference_skips_leading_nulls(spark, tmp_path):
+    """A null field in record 1 takes its type from the first non-null
+    value, as in arcgis_sim, instead of being pinned to string."""
+    path = tmp_path / "nulls.jsonl"
+    rows = [{"oid": 1, "speed": None}, {"oid": 2, "speed": 1.5}]
+    path.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    srv = SimFeatureServer(str(path))
+    url = srv.start()
+    try:
+        register(spark)
+        df = _reader(spark, url)
+        assert df.schema.simpleString() == "struct<oid:bigint,speed:double>"
+        assert sorted(tuple(r) for r in df.collect()) == [(1, None), (2, 1.5)]
+    finally:
+        srv.stop()
 
 
 def test_user_where_option_composes_with_pushdown(spark, server):
@@ -246,6 +345,30 @@ def test_where_parser_subset():
         _parse_where("oid = 1 OR oid = 2")  # OR not in the pushed subset
     with pytest.raises(ValueError):
         _parse_where("1=1; DROP TABLE x")
+    # SQL-92 approximate numeric literals (mantissa E exponent)
+    assert _parse_where("speed > 1e-05")({"speed": 2e-5})
+    assert not _parse_where("speed > 1e-05")({"speed": 0.0})
+    assert _parse_where("speed < 1E+20 AND speed >= -2.5e3")({"speed": -2500.0})
+    # the translator spells what the parser reads ...
+    for f, sql, rec in (
+        (GreaterThan(("speed",), 1e-05), "speed > 1e-05", {"speed": 2e-5}),
+        (In(("s",), ("it's", "b")), "s IN ('it''s', 'b')", {"s": "it's"}),
+        (IsNotNull(("x",)), "x IS NOT NULL", {"x": 0}),
+    ):
+        assert filter_sql(f) == sql and _parse_where(sql)(rec), f
+    # ... and hands back to Spark what the grammar cannot spell
+    for f in (
+        GreaterThan(("speed",), float("inf")),
+        LessThan(("speed",), float("-inf")),
+        EqualTo(("speed",), float("nan")),
+        In(("oid",), (1, None)),
+        In(("oid",), ()),
+        EqualTo(("odd name",), 1),
+        EqualTo(("a", "b"), 1),
+        EqualTo(("IN",), 1),
+        EqualTo(("ts",), None),
+    ):
+        assert filter_sql(f) is None, f
 
 
 # ---------------------------------------------------------------------------
