@@ -30,11 +30,47 @@ def _read(name: str) -> str:
 
 
 def _survey_rows(survey: str):
-    """Yield (row_id, title, query_names) for every §2 inventory row."""
-    for m in re.finditer(r"^\| ([ABC]\d+) \| ([^|]+) \|(.*)\|\s*$", survey, re.M):
-        rid, title, rest = m.group(1), m.group(2).strip(), m.group(3)
-        last = rest.rsplit("|", 1)[-1]
-        yield rid, title, re.findall(r"`([a-z][a-z0-9_]+)`", last)
+    """Yield (row_id, title, query_names) for every §2 inventory row.
+
+    Cells split on `|` outside code spans: a title like
+    `` `col ASC|DESC, ...` `` is one cell.
+    """
+    for m in re.finditer(r"^\| ([ABC]\d+) \|(.*\|)\s*$", survey, re.M):
+        cells = re.findall(r"((?:`[^`\n]*`|[^`|\n])*)\|", m.group(2))
+        yield m.group(1), cells[0].strip(), re.findall(
+            r"`([a-z][a-z0-9_]+)`", cells[-1]
+        )
+
+
+def _survey_section(survey: str, heading: str) -> str:
+    """The text of one SURVEY section, from its heading to the next
+    heading of the same or a higher level."""
+    m = re.search(rf"^(#+) {re.escape(heading)}.*$", survey, re.M)
+    assert m, f"SURVEY.md has no '{heading}' heading"
+    level = len(m.group(1))
+    end = re.compile(rf"^#{{1,{level}}} ", re.M).search(survey, m.end())
+    return survey[m.start() : end.start() if end else len(survey)]
+
+
+def test_survey_rows_yields_every_section_2_row():
+    survey = _read("SURVEY.md")
+    section = _survey_section(survey, "2. Operator inventory")
+    expected = re.findall(r"^\| ([ABC]\d+) \|", section, re.M)
+    assert expected, "SURVEY §2 has no inventory rows"
+    assert [rid for rid, _, _ in _survey_rows(survey)] == expected
+
+
+def test_survey_contract_set_is_registered():
+    """Every name of the SURVEY §2.1 declared query set (the contract,
+    `*` = weak) is a registered query."""
+    registry.load_all()
+    section = _survey_section(_read("SURVEY.md"), "2.1 Declared t2 query set")
+    declared = int(re.search(r"(\d+) names", section).group(1))
+    block = re.search(r"`([^`]+)`", section).group(1)
+    names = [n.strip().rstrip("*") for n in block.split(",")]
+    assert len(set(names)) == declared, (declared, len(set(names)))
+    missing = sorted(set(names) - set(registry.QUERIES))
+    assert not missing, f"§2.1 contract names not registered: {missing}"
 
 
 def test_every_registered_query_is_documented():

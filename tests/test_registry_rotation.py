@@ -1,6 +1,8 @@
 """The driver checks only the first 50 entries of queries() per round —
-the registry's unverified-first ordering is what converges that partial
-check to full coverage across rounds. Pin its behavior."""
+the registry's ordering is what converges that partial check to full
+coverage across rounds. Pin its three tiers: names whose latest driver
+row failed, then never-verified names in registration order, then
+verified names by latest clean round, oldest first."""
 
 from __future__ import annotations
 
@@ -8,12 +10,22 @@ import json
 
 from etl_arcgis_spark import registry
 
+_GREEN = {"hash_match": True, "err": None, "spark_rows": 1}
+_WEAK_RAN = {"hash_match": None, "err": "no_oracle", "spark_rows": 5}
+_ERROR = {"hash_match": None, "err": "boom", "spark_rows": None}
+
 
 def _ordered_names(monkeypatch, tmp_path, correctness: dict) -> list[str]:
     for fname, rows in correctness.items():
-        (tmp_path / fname).write_text(json.dumps(rows))
+        text = rows if isinstance(rows, str) else json.dumps(rows)
+        (tmp_path / fname).write_text(text)
     monkeypatch.setattr(registry, "_REPO_DIR", str(tmp_path))
     return list(registry.all_queries())
+
+
+def _registered() -> list[str]:
+    registry.load_all()
+    return list(registry.QUERIES)
 
 
 def test_unverified_queries_register_first(monkeypatch, tmp_path):
@@ -23,24 +35,43 @@ def test_unverified_queries_register_first(monkeypatch, tmp_path):
         {
             "CORRECTNESS_r01.json": {
                 # hash-green -> verified
-                "scan_project_filter": {"hash_match": True, "err": None, "spark_rows": 1},
+                "scan_project_filter": _GREEN,
                 # weak-ran -> verified
-                "minhash_lsh_dedup": {"hash_match": None, "err": "no_oracle", "spark_rows": 5},
+                "minhash_lsh_dedup": _WEAK_RAN,
                 # driver ERROR -> re-verify FIRST
-                "join_inner_equi": {"hash_match": None, "err": "boom", "spark_rows": None},
+                "join_inner_equi": _ERROR,
             }
         },
     )
-    # the fixed ERROR re-verifies ahead of everything
+    verified = {"scan_project_filter", "minhash_lsh_dedup"}
+    # the failed name leads, never-verified names follow in
+    # registration order, the verified names come last
+    unverified = [
+        n for n in _registered() if n not in verified and n != "join_inner_equi"
+    ]
     assert names[0] == "join_inner_equi"
-    # verified names sort to the back half
-    n = len(names)
-    assert names.index("scan_project_filter") > n - 60
-    assert names.index("minhash_lsh_dedup") > n - 60
-    # the r6 front pin (two-round stragglers) shares the lead tier,
-    # then the unverified contract families (scans/filters)
-    assert set(names[1:3]) == set(registry._R6_FRONT)
-    assert names[3].startswith("scan_")
+    assert names[1 : 1 + len(unverified)] == unverified
+    assert set(names[-2:]) == verified
+    # ordering never changes the registered set; oracles follow it
+    assert sorted(names) == sorted(_registered())
+    assert list(registry.all_oracles()) == [n for n in names if n in registry.ORACLES]
+
+
+def test_verified_names_rotate_oldest_clean_round_first(monkeypatch, tmp_path):
+    reg = _registered()
+    a, b, c, d = reg[0], reg[1], reg[2], reg[3]
+    names = _ordered_names(
+        monkeypatch,
+        tmp_path,
+        {
+            "CORRECTNESS_r01.json": {b: _GREEN, c: _GREEN, d: _GREEN},
+            # a and b re-verified in r02; d's later row is weak-ran
+            "CORRECTNESS_r02.json": {a: _GREEN, b: _GREEN, d: _WEAK_RAN},
+        },
+    )
+    # c's latest clean row is r01 (oldest); a, b, d tie on r02 and keep
+    # registration order
+    assert names[-4:] == [c, a, b, d]
 
 
 def test_later_round_green_clears_earlier_error(monkeypatch, tmp_path):
@@ -80,72 +111,26 @@ def test_later_round_error_demotes_earlier_green(monkeypatch, tmp_path):
 
 
 def test_no_correctness_files_preserves_priority_order(monkeypatch, tmp_path):
+    # nothing verified: every name is in the never-verified tier, so
+    # the order is registration order and the set is unchanged
     names = _ordered_names(monkeypatch, tmp_path, {})
-    # the r6 front-pinned stragglers lead, then contract families
-    assert set(names[:2]) == set(registry._R6_FRONT)
-    assert names[2].startswith("scan_")
-    assert len(names) == len(set(names))
+    assert names == _registered()
 
 
-def test_contract_names_all_registered():
-    registry.load_all()
-    missing = registry._CONTRACT_NAMES - set(registry.QUERIES)
-    assert not missing, f"§2.1 contract names not registered: {sorted(missing)}"
-
-
-def test_unchecked_contract_names_pin_into_first_50(monkeypatch, tmp_path):
-    """Round-3 regression: newly-registered extension modules must NOT
-    displace never-driver-checked §2.1 contract names out of the
-    driver's first-50 window. Simulate every non-contract name being
-    green while contract names are unchecked: they must ALL sort into
-    the front window regardless of module priority."""
-    registry.load_all()
-    green = {
-        n: {"hash_match": True, "err": None, "spark_rows": 1}
-        for n in registry.QUERIES
-        if n not in registry._CONTRACT_NAMES
-    }
+def test_malformed_correctness_inputs_are_skipped(monkeypatch, tmp_path):
     names = _ordered_names(
-        monkeypatch, tmp_path, {"CORRECTNESS_r01.json": green}
+        monkeypatch,
+        tmp_path,
+        {
+            # invalid JSON: the whole file is skipped
+            "CORRECTNESS_r01.json": '{"scan_project_filter": ',
+            # non-dict rows are skipped, the dict row still counts
+            "CORRECTNESS_r02.json": {"join_inner_equi": "ERROR", "join_semi": _GREEN},
+            # non-integer round suffix: the whole file is skipped
+            "CORRECTNESS_rXX.json": {"join_anti": _ERROR},
+            # a non-dict top level is skipped
+            "CORRECTNESS_r03.json": ["join_full_outer"],
+        },
     )
-    positions = {n: i for i, n in enumerate(names)}
-    # every unchecked contract name precedes every other registration
-    # EXCEPT active r7 refresh pins (re-spelled-after-row names share
-    # the front tier by design — here the simulated green r01 rows make
-    # the non-contract pin names active) — so whenever fewer than 50
-    # are unchecked (the steady state) they ALL sit inside the driver's
-    # first-50 window.
-    active_pins = [
-        n
-        for n in (
-            tuple(registry._R7_REFRESH_PIN)
-            + tuple(registry._R10_RESPELL_PIN)
-            + tuple(registry._R11_RESPELL_PIN)
-        )
-        if n in green
-    ]
-    late = [
-        n
-        for n in registry._CONTRACT_NAMES
-        if positions[n] >= len(registry._CONTRACT_NAMES) + len(active_pins)
-    ]
-    assert not late, f"contract names displaced by extensions: {late}"
-
-
-def test_contract_tier_beats_extension_module_priority(monkeypatch, tmp_path):
-    """With nothing verified, an unchecked contract name from a LOW
-    priority module (e.g. multimodal) still sorts ahead of unchecked
-    extension names from HIGH priority modules (e.g. scans)."""
-    names = _ordered_names(monkeypatch, tmp_path, {})
-    positions = {n: i for i, n in enumerate(names)}
-    # the r5/r6 backlog pins share the contract tier by design — and
-    # the r6 front pin leads it — exclude all of them
-    pinned = (
-        registry._CONTRACT_NAMES
-        | registry._R5_BACKLOG_PIN
-        | registry._R6_BACKLOG_PIN
-        | set(registry._R6_FRONT)
-    )
-    contract_max = max(positions[n] for n in registry._CONTRACT_NAMES)
-    ext_min = min(positions[n] for n in registry.QUERIES if n not in pinned)
-    assert contract_max < ext_min
+    assert names[-1] == "join_semi"
+    assert names[:-1] == [n for n in _registered() if n != "join_semi"]

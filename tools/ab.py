@@ -16,6 +16,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+import bench  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
 from etl_arcgis_spark import tables  # noqa: E402
@@ -31,17 +32,13 @@ LIMIT 20
 """
 
 
-def mat(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
 def timeit(fn, n=7):
-    mat(fn())
-    mat(fn())
+    bench.materialize(fn())
+    bench.materialize(fn())
     runs = []
     for _ in range(n):
         t0 = time.perf_counter()
-        mat(fn())
+        bench.materialize(fn())
         runs.append(time.perf_counter() - t0)
     return statistics.median(runs)
 

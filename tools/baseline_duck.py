@@ -23,19 +23,9 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb  # noqa: E402
 
+from bench import HEADLINE  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.tables import TABLE_NAMES  # noqa: E402
-
-HEADLINE = [
-    "agg_groupby_stats",
-    "join_star_multiway",
-    "window_rank_topk_per_group",
-    "window_running_sum",
-    "stream_tumbling_window_agg",
-    "agg_count_distinct_exact",
-    "sim_cosine_topk_pairs",
-    "text_tokenize_wordcount",
-]
 
 
 def main() -> int:

@@ -13,18 +13,12 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import bench  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
 
 HEADLINE = [
-    "agg_groupby_stats",
-    "join_star_multiway",
-    "window_rank_topk_per_group",
-    "window_running_sum",
-    "stream_tumbling_window_agg",
-    "agg_count_distinct_exact",
-    "sim_cosine_topk_pairs",
-    "text_tokenize_wordcount",
+    *bench.HEADLINE,
     "agg_equidepth_histogram",
     "window_ntile_percent",
     "join_salted_skew",
@@ -64,7 +58,7 @@ def main() -> None:
     out = [HEADER]
     for name in HEADLINE:
         df = qs[name](spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
+        bench.materialize(df)
         plan = df._jdf.queryExecution().executedPlan().toString()
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
     with open("/root/repo/PLANS.md", "w") as fh:
