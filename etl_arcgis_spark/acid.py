@@ -632,7 +632,8 @@ def create(
     files = _write_data_files(df, root, key=key, partition_by=partition_by, seq=1)
     man: dict[str, Any] = {
         "version": 1, "key": key, "operation": "create", "files": files,
-        "rows": df.count(), "schema": df.schema.json(), "last_seq": 1,
+        "rows": _written_rows(files, df), "schema": df.schema.json(),
+        "last_seq": 1,
     }
     if partition_by is not None:
         man["partition_by"] = partition_by
@@ -1102,15 +1103,17 @@ def merge(
     MERGE affordable at 100 TB: rewrite cost scales with the files the
     keys actually hit, not the table.
 
-    On a concurrent-commit conflict the merge RE-READS the new current
-    snapshot and retries — optimistic concurrency, no locks held.
-
-    Source preconditions (checked in ONE small Spark job, standard
-    MERGE INTO semantics): the merge key must be non-null (a NULL key
-    can never match and would otherwise emit an all-NULL ghost row out
-    of the full-outer join) and unique (duplicate source keys would
-    multiply matched target rows; SQL MERGE errors on multiple
-    matches). Violations raise ValueError before any file is written.
+    One pre-pass (_merge_prepass), a single Spark action over the
+    source, both checks the source and picks the touched files. The
+    merge key must be non-null (a NULL key can never match and would
+    otherwise emit an all-NULL ghost row out of the full-outer join) and
+    unique (duplicate source keys would multiply matched target rows;
+    SQL MERGE errors on multiple matches); violations raise ValueError
+    before any file is written. After the write, no further action: the
+    manifest's ``rows`` sums the new files' footer row counts. On a
+    concurrent-commit conflict the merge RE-READS the new current
+    snapshot, redoes the pre-pass and retries — optimistic concurrency,
+    no locks held.
 
     Conditional clauses (the full MERGE matrix, SQL spelling —
     predicates over ``s.*``/``t.*``):
@@ -1131,25 +1134,6 @@ def merge(
     via a follow-up column projection, or accept them as lineage
     columns, the Delta CDC-apply convention)."""
     _check_reserved_cols(source, "merge() source")
-    base_man = _read_manifest_or_raise(root)
-    key0 = base_man["key"]
-    chk = source.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(key0).alias("n_nonnull"),
-        F.count_distinct(key0).alias("n_distinct"),
-    ).collect()[0]
-    if chk["n"] != chk["n_nonnull"]:
-        raise ValueError(
-            f"merge source has {chk['n'] - chk['n_nonnull']} NULL "
-            f"{key0!r} key(s); MERGE requires non-null merge keys"
-        )
-    if chk["n_nonnull"] != chk["n_distinct"]:
-        raise ValueError(
-            f"merge source has duplicate {key0!r} keys "
-            f"({chk['n_nonnull']} rows, {chk['n_distinct']} distinct); "
-            "MERGE requires unique source keys — dedupe first "
-            "(e.g. operators/dedup.dedup_key_last_write)"
-        )
     for _ in range(max_retries):
         base_v = current_version(root)
         if base_v is None:
@@ -1157,43 +1141,9 @@ def merge(
         man = _read_manifest(root, base_v)
         key = man["key"]
         pcol = man.get("partition_by")
-        cand = man["files"]
-        if pcol is not None:
-            # partition pruning BEFORE key-range stats: only files in
-            # partitions the source actually writes can be touched
-            # (|distinct source partitions| is bounded — one collect)
-            if pcol not in source.columns:
-                raise ValueError(
-                    f"merge source must carry partition column {pcol!r}"
-                )
-            # logical values: None stays None (manifest partition
-            # entries are decoded from the Hive dir names, so a NULL
-            # partition is None on both sides — not 'None' / the
-            # __HIVE_DEFAULT_PARTITION__ sentinel string)
-            src_parts = {
-                None if r[0] is None else str(r[0])
-                for r in source.select(pcol).distinct().collect()
-            }
-            # trust a file's partition value only if its layout spec IS
-            # the current spec AND the value carries the logical-
-            # encoding stamp (part_v); files from an older spec
-            # (partition evolution) or with unstamped (possibly
-            # raw-escaped, pre-r6) values stay candidates and fall
-            # through to key-range pruning — conservative, never wrong
-            cand = [
-                f for f in cand
-                if _file_spec(f, pcol) != pcol
-                or f.get("part_v") != _PART_VERSION
-                or f.get("partition") in src_parts
-            ]
-            kept = {f["path"] for f in cand}
-            part_untouched = [f for f in man["files"] if f["path"] not in kept]
-        else:
-            part_untouched = []
-        touched, untouched = _split_by_key_overlap(
-            spark, root, cand, source, key
-        )
-        untouched = part_untouched + untouched
+        if pcol is not None and pcol not in source.columns:
+            raise ValueError(f"merge source must carry partition column {pcol!r}")
+        touched, untouched = _merge_prepass(source, man)
         if touched:
             target = _read_paths(
                 spark, root, man,
@@ -1256,7 +1206,7 @@ def merge(
                 "operation": "merge",
                 "schema": merged.schema.json(),
                 "files": untouched + new_files,
-                "rows": merged.count()
+                "rows": _written_rows(new_files, merged)
                 + sum(
                     f.get("rows", 0)
                     - mor_del.get(os.path.basename(f["path"]), 0)
@@ -1288,39 +1238,86 @@ def merge(
     raise CommitConflict(f"merge lost {max_retries} races at {root}")
 
 
-def _split_by_key_overlap(
-    spark: SparkSession,
-    root: str,
-    files: list[dict[str, Any]],
-    source: DataFrame,
-    key: str,
+def _merge_prepass(
+    source: DataFrame, man: dict[str, Any]
 ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """(touched, untouched) file entries: touched iff >= 1 source key
-    lies in the file's recorded [min, max] key range. Entries without
-    stats are conservatively touched. The overlap check is ONE Spark
-    job: the (tiny) range list broadcasts against the source keys."""
-    no_stats = [f for f in files if "key_range" not in f]
-    with_stats = [f for f in files if "key_range" in f]
-    if not with_stats:
-        return files, []
-    ranges = spark.createDataFrame(
-        [(i, f["key_range"][0], f["key_range"][1]) for i, f in enumerate(with_stats)],
-        ["fid", "lo", "hi"],
-    )
-    hit = (
-        source.select(F.col(key).alias("k"))
-        .join(
-            F.broadcast(ranges),
-            (F.col("k") >= F.col("lo")) & (F.col("k") <= F.col("hi")),
+    """The merge's one Spark action over the source, before any write:
+    the key preconditions (ValueError on a NULL or duplicate key) and
+    the (touched, untouched) split of ``man``'s files. A file is touched
+    iff >= 1 source key k has ``lo <= k <= hi`` for its recorded
+    ``key_range`` (compared on the source key's type; files without
+    stats, or ranges that do not parse as that type, stay touched) and,
+    on a partitioned table, the source writes its partition (unstamped
+    or older-spec entries stay candidates, see _file_spec/part_v). The
+    ranges ship as one JSON literal, constant-folded by Catalyst."""
+    key, pcol, files = man["key"], man.get("partition_by"), man["files"]
+    k = F.col(key)
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.count(k).alias("n_nonnull"),
+        F.count_distinct(k).alias("n_distinct"),
+    ]
+    ranged = [i for i, f in enumerate(files) if "key_range" in f]
+    if ranged:
+        from pyspark.sql.types import ArrayType
+
+        rng = F.from_json(
+            F.lit(json.dumps([files[i]["key_range"] for i in ranged])),
+            ArrayType(ArrayType(source.schema[key].dataType)),
         )
-        .select("fid")
-        .distinct()
-        .collect()
+        # a bound that does not parse reads as NULL (an unparseable
+        # literal as a NULL array) and keeps its file(s) touched
+        inside = lambda r, i: F.when(
+            F.coalesce((r[0] <= k) & (k <= r[1]), F.lit(True)), i
+        )
+        hit = F.coalesce(
+            F.filter(F.transform(rng, inside), lambda i: i.isNotNull()),
+            F.sequence(F.lit(0), F.lit(len(ranged) - 1)),
+        )
+        aggs.append(F.array_distinct(F.flatten(F.collect_set(hit))).alias("hit"))
+    if pcol is not None:
+        # array-wrapped so a NULL partition value survives collect_set
+        aggs.append(F.collect_set(F.array(F.col(pcol))).alias("parts"))
+    chk = source.agg(*aggs).collect()[0]
+    if chk["n"] != chk["n_nonnull"]:
+        raise ValueError(
+            f"merge source has {chk['n'] - chk['n_nonnull']} NULL "
+            f"{key!r} key(s); MERGE requires non-null merge keys"
+        )
+    if chk["n_nonnull"] != chk["n_distinct"]:
+        raise ValueError(
+            f"merge source has duplicate {key!r} keys "
+            f"({chk['n_nonnull']} rows, {chk['n_distinct']} distinct); "
+            "MERGE requires unique source keys — dedupe first "
+            "(e.g. operators/dedup.dedup_key_last_write)"
+        )
+    hit_ids = {ranged[i] for i in chk["hit"]} if ranged else set()
+    touch = [i in hit_ids or "key_range" not in f for i, f in enumerate(files)]
+    if pcol is not None:
+        # logical values: None stays None (manifest partition entries
+        # are decoded from the Hive dir names, so a NULL partition is
+        # None on both sides — not 'None' / the Hive sentinel string)
+        src_parts = {None if p[0] is None else str(p[0]) for p in chk["parts"]}
+        touch = [
+            t and (
+                _file_spec(f, pcol) != pcol
+                or f.get("part_v") != _PART_VERSION
+                or f.get("partition") in src_parts
+            )
+            for t, f in zip(touch, files)
+        ]
+    return (
+        [f for t, f in zip(touch, files) if t],
+        [f for t, f in zip(touch, files) if not t],
     )
-    hit_ids = {r.fid for r in hit}
-    touched = no_stats + [f for i, f in enumerate(with_stats) if i in hit_ids]
-    untouched = [f for i, f in enumerate(with_stats) if i not in hit_ids]
-    return touched, untouched
+
+
+def _written_rows(entries: list[dict[str, Any]], df: DataFrame) -> int:
+    """Rows in freshly written files, summed from the parquet footers
+    _file_entry read; one ``df.count()`` only if a footer was not."""
+    if all("rows" in e for e in entries):
+        return sum(e["rows"] for e in entries)
+    return df.count()
 
 
 def append(spark: SparkSession, root: str, df: DataFrame) -> int:
@@ -1348,7 +1345,7 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
         "operation": "append",
         "schema": df.schema.json(),
         "files": man["files"] + new_files,
-        "rows": man.get("rows", 0) + df.count(),
+        "rows": man.get("rows", 0) + _written_rows(new_files, df),
         "parent": base_v,
         "last_seq": new_seq,
     }

@@ -76,26 +76,27 @@ def explode_multi(df: DataFrame, id_col: str = "id") -> DataFrame:
     type ``X`` with ids suffixed ``-{idx}`` and duplicated attributes;
     non-Multi features pass through with id and part count 1 intact.
 
-    ``posexplode`` is a generator in the scan stage: row-count expansion
-    without any shuffle.
+    One scan, one ``posexplode`` in the scan stage (no shuffle): a Multi
+    feature with coords explodes into its parts, and every other row —
+    including a Multi whose coords failed to parse, which the routing
+    stage must count as a skip — explodes a one-element placeholder
+    into itself. A Multi with an empty parts array yields no rows.
     """
-    is_multi = F.col("geom_type").isin(*MULTI_TYPES)
-    explodable = is_multi & F.col("coords").isNotNull()
-    exploded = (
-        df.filter(explodable)
-        .select(
-            "*", F.posexplode("coords").alias("part_idx", "part")
+    # NULL (unknown geom_type) takes the otherwise branch, like False
+    explodable = F.col("geom_type").isin(*MULTI_TYPES) & F.col("coords").isNotNull()
+    parts = F.when(explodable, F.col("coords")).otherwise(F.array(F.lit(None)))
+    replaced = {
+        id_col: F.concat(F.col(id_col), F.lit("-"), F.col("__part_idx")),
+        "geom_type": F.regexp_replace("geom_type", "^Multi", ""),
+        "coords": F.array(F.col("__part")),
+    }
+    return (
+        df.select("*", F.posexplode(parts).alias("__part_idx", "__part"))
+        .withColumns(
+            {c: F.when(explodable, e).otherwise(F.col(c)) for c, e in replaced.items()}
         )
-        .withColumn(id_col, F.concat(F.col(id_col), F.lit("-"), F.col("part_idx")))
-        .withColumn("geom_type", F.regexp_replace("geom_type", "^Multi", ""))
-        .withColumn("coords", F.array(F.col("part")))
-        .drop("part_idx", "part")
+        .drop("__part_idx", "__part")
     )
-    # Multi features with NULL coords (unparseable geometry) pass
-    # through unexploded so the routing stage can count them as skips —
-    # posexplode alone would silently erase them
-    passthrough = df.filter(~explodable | F.col("geom_type").isNull())
-    return passthrough.unionByName(exploded)
 
 
 def route_by_geom_type(df: DataFrame) -> DataFrame:

@@ -25,9 +25,12 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -96,6 +99,41 @@ def projector(schema: StructType):
         return tuple(_cell(rec.get(n), s) for n, s in cols)
 
     return project
+
+
+def _to_json(dt: DataType):
+    """Converter of one value of type ``dt`` to its JSON shape, or None
+    when ``dt`` holds no struct and the value serializes as it is."""
+    if isinstance(dt, StructType):
+        subs = [(f.name, _to_json(f.dataType)) for f in dt.fields]
+        return lambda v: None if v is None else {
+            n: x if c is None else c(x) for (n, c), x in zip(subs, v)
+        }
+    if isinstance(dt, ArrayType):
+        c = _to_json(dt.elementType)
+        return c and (lambda v: None if v is None else [c(x) for x in v])
+    if isinstance(dt, MapType):
+        c = _to_json(dt.valueType)
+        return c and (lambda v: None if v is None else {k: c(x) for k, x in v.items()})
+    return None
+
+
+def json_encoder(schema: StructType):
+    """Sink-side row encoding: ``encode(row) -> dict`` of field name to
+    a JSON-ready value. Struct values arrive as ``Row`` tuples, which
+    ``json.dumps`` writes as arrays; the schema picks out the columns
+    that hold a struct, and only those are converted."""
+    names = [f.name for f in schema.fields]
+    convs = [(i, f.name, _to_json(f.dataType)) for i, f in enumerate(schema.fields)]
+    convs = [t for t in convs if t[2] is not None]
+
+    def encode(row) -> dict:
+        out = dict(zip(names, row))
+        for i, n, c in convs:
+            out[n] = c(row[i])
+        return out
+
+    return encode
 
 
 # --------------------------------------------------------------------------
@@ -191,7 +229,9 @@ class WherePushdown:
     refuses any reader that implements ``pushFilters``. The default
     formats therefore push nothing; the ``_pushdown`` formats serve
     single-scan pulls, the reference's access pattern (one ARCGIS_QUERY
-    per scheduled pull)."""
+    per scheduled pull). The incoming chain (``parse_geometry`` ->
+    ``rewrite_id`` -> ``nest_metadata`` -> ``geojson.explode_multi``)
+    is single-scan, so it is safe over a ``_pushdown`` format."""
 
     where_parts: list[str]
 

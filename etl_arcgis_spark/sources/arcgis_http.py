@@ -68,6 +68,7 @@ from .arcgis_core import (
     WherePushdown,
     _parse_where,
     fields_schema,
+    json_encoder,
     layer_fields,
     projector,
 )
@@ -385,7 +386,7 @@ class ArcGISHttpWriter(DataSourceWriter):
 
     def write(self, iterator) -> HttpChunkCommit:
         broker = HttpTokenBroker(self.url)
-        names = [f.name for f in self.schema.fields]
+        encode = json_encoder(self.schema)
         buf: list[dict] = []
         n = 0
 
@@ -401,7 +402,7 @@ class ArcGISHttpWriter(DataSourceWriter):
             buf = []
 
         for row in iterator:
-            buf.append(dict(zip(names, row)))
+            buf.append(encode(row))
             n += 1
             if len(buf) >= self.chunk:
                 flush()

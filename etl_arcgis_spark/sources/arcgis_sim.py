@@ -64,6 +64,7 @@ from .arcgis_core import (
     WherePushdown,
     _parse_where,
     fields_schema,
+    json_encoder,
     layer_fields,
     projector,
 )
@@ -221,11 +222,11 @@ class _JsonlChunkSink:
         pid = TaskContext.get().partitionId()
         os.makedirs(self.out_dir, exist_ok=True)
         tmp = f"{self.out_dir}/.tmp-{uuid.uuid4().hex}-{pid:05d}"
-        names = [f.name for f in self.schema.fields]
+        encode = json_encoder(self.schema)
         n = 0
         with open(tmp, "w") as fh:
             for row in iterator:
-                fh.write(json.dumps(dict(zip(names, row))) + "\n")
+                fh.write(json.dumps(encode(row)) + "\n")
                 n += 1
         return ChunkCommit(path=tmp, rows=n, partition=pid)
 

@@ -1969,3 +1969,74 @@ def test_update_where_set_expr_guarded_by_predicate(spark, tmp_path):
     )
     got2 = {r.id: r.v for r in acid.read(spark, root2).collect()}
     assert got2 == {1: 0, 2: 30}
+
+
+def _data_files(root):
+    return sorted(glob.glob(os.path.join(root, "data", "**", "*.parquet"), recursive=True))
+
+
+def test_merge_job_budget(spark, wide_tbl):
+    """One pre-pass before the write and no action after it: a small
+    merge into a four-file table runs at most 8 Spark jobs, counted per
+    job group the way the benchmark counts ``acid.merge_jobs``."""
+    import uuid
+
+    assert len(acid._read_manifest(wide_tbl, 1)["files"]) >= 4
+    src = spark.createDataFrame([(3, "X"), (60, "Y"), (500, "Z")], "id INT, v STRING")
+    sc, group = spark.sparkContext, f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        acid.merge(spark, wide_tbl, src)
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert acid.read(spark, wide_tbl).count() == 101
+
+
+def test_merge_manifest_rows_equal_read_count(spark, wide_tbl, part_tbl, tmp_path):
+    """The manifest's ``rows`` (footer row counts of the new files plus
+    the carried entries') equals ``read().count()`` after merges into a
+    plain table, a partitioned one, one with a merge-on-read delete
+    overlay and one whose file lacks ``key_range``."""
+
+    def check(root, src):
+        acid.merge(spark, root, src)
+        man = acid._read_manifest(root, acid.current_version(root))
+        assert man["rows"] == acid.read(spark, root).count()
+
+    src = spark.createDataFrame([(3, "X"), (60, "Y"), (500, "Z")], "id INT, v STRING")
+    check(wide_tbl, src)
+    check(
+        part_tbl,
+        spark.createDataFrame(
+            [(4, "X", "green"), (7, "Y", "green"), (900, "Z", "red")],
+            "id INT, v STRING, cat STRING",
+        ),
+    )
+    acid.delete_where_mor(spark, wide_tbl, "id IN (10, 11, 80)")
+    assert acid._read_manifest(wide_tbl, acid.current_version(wide_tbl)).get("deletes")
+    check(wide_tbl, spark.createDataFrame([(11, "back"), (20, "W")], "id INT, v STRING"))
+
+    root = str(tmp_path / "nokr")
+    acid.create(spark, root, spark.range(0, 40).selectExpr(
+        "CAST(id AS INT) AS id", "CAST(id AS STRING) AS v").repartition(2), key="id")
+    mpath = acid._manifest_path(root, 1)
+    man = json.load(open(mpath))
+    man["files"][0].pop("key_range")
+    json.dump(man, open(mpath, "w"))
+    check(root, spark.createDataFrame([(5, "X"), (41, "Y")], "id INT, v STRING"))
+    assert acid._read_manifest(root, 2)["rewrote_files"] >= 1
+
+
+def test_rejected_merge_writes_no_file(spark, wide_tbl):
+    """NULL-key and duplicate-key sources are rejected by the pre-pass,
+    before any data file lands under ``data/``."""
+    before = _data_files(wide_tbl)
+    for bad, match in (
+        ([(None, "ghost"), (5, "ok")], "NULL"),
+        ([(5, "a"), (5, "b")], "duplicate"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            acid.merge(spark, wide_tbl, spark.createDataFrame(bad, "id INT, v STRING"))
+    assert _data_files(wide_tbl) == before
+    assert acid.current_version(wide_tbl) == 1

@@ -427,3 +427,70 @@ def test_batch_writer_commit_sweeps_lost_attempt_tmp(tmp_path):
     w.commit([ChunkCommit(path=str(winner), rows=1, partition=0)])
     assert (out / "chunk-00000.jsonl").exists()
     assert not list(out.glob(".tmp-*"))
+
+
+def test_incoming_chain_is_one_scan(spark, geo_layer):
+    """The incoming chain (parse -> id rewrite -> nest -> explode) reads
+    the layer once: ``explode_multi`` is one posexplode, not a union of
+    an exploded and a passthrough branch over the same relation."""
+    from conftest import expected_incoming_ids, incoming_chain
+
+    path, feats = geo_layer
+    register(spark)
+    raw = spark.read.format("arcgis_sim").option("path", path).option("pageSize", 100).load()
+    out = incoming_chain(raw)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BatchScan") == 1, plan
+    got = sorted(r["id"] for r in out.collect())
+    assert got == expected_incoming_ids(feats, {k for _, k, _ in feats})
+
+
+def test_explode_over_pushdown_keeps_every_id(spark, geo_layer):
+    """Over ``arcgis_sim_pushdown`` with a geom_type filter upstream, the
+    explode returns every feature the filter keeps. A two-branch explode
+    pushed a different filter into each branch's scan, Spark merged the
+    two scans, and one branch's rows went missing."""
+    from conftest import expected_incoming_ids, incoming_chain
+
+    path, feats = geo_layer
+    register(spark)
+    kinds = {"Point", "MultiPoint", "MultiPolygon"}
+    raw = (
+        spark.read.format("arcgis_sim_pushdown").option("path", path)
+        .option("pageSize", 100).load()
+        .filter(F.col("geom_type").isin(*kinds))
+    )
+    got = sorted(r["id"] for r in incoming_chain(raw).collect())
+    assert got == expected_incoming_ids(feats, kinds)
+
+
+def test_sink_writes_struct_columns_as_objects(spark, geo_layer, tmp_path):
+    """A struct value lands as a JSON object keyed by its field names
+    (``{"metadata": {...}}``, task.ts:429-431), also inside arrays and
+    maps, and a NULL struct as null; flat columns land as they are."""
+    from conftest import incoming_chain
+
+    path, feats = geo_layer
+    register(spark)
+    raw = spark.read.format("arcgis_sim").option("path", path).load()
+    out = incoming_chain(raw).select(
+        "id",
+        "properties",
+        F.array(F.struct(F.col("geom_type").alias("t"))).alias("tags"),
+        F.create_map(F.lit("k"), F.struct(F.lit(1).alias("v"))).alias("extra"),
+        F.when(F.col("geom_type").isNotNull(), F.struct(F.col("geom_type").alias("t")))
+        .alias("maybe"),
+    )
+    sink = tmp_path / "sink"
+    out.write.format("arcgis_sim").option("path", str(sink)).mode("append").save()
+    landed = {
+        r["id"]: r for c in sink.glob("chunk-*.jsonl") for r in map(json.loads, open(c))
+    }
+    callsign = {f"layer-9-{fid}": f"unit-{fid % 5}" for fid, _, _ in feats}
+    assert len(landed) == out.count()
+    for fid, r in landed.items():
+        base = fid if fid in callsign else fid.rsplit("-", 1)[0]
+        assert r["properties"] == {"metadata": {"callsign": callsign[base]}}
+        assert r["tags"] == [{"t": r["maybe"]["t"] if r["maybe"] else None}]
+        assert r["extra"] == {"k": {"v": 1}}
+    assert landed["layer-9-6"]["maybe"] is None  # fid 6 has no geometry

@@ -420,3 +420,36 @@ def test_stream_tail_incremental_batches(spark, server, tmp_path):
         p.get("where") for m, path, p in srv.request_log if "query" in path
     ]
     assert any(w and "oid > 249" in w for w in wheres), wheres[-5:]
+
+
+def test_explode_over_pushdown_keeps_every_id(spark, geo_layer):
+    """Twin of the arcgis_sim test: the incoming chain over
+    ``arcgis_http_pushdown`` with an upstream geom_type filter returns
+    every id the filter keeps (one scan, one pushed where), and the
+    addFeatures sink posts struct columns as JSON objects."""
+    from conftest import expected_incoming_ids, incoming_chain
+
+    path, feats = geo_layer
+    srv = SimFeatureServer(path)
+    url = srv.start()
+    try:
+        register(spark)
+        kinds = {"Point", "MultiPoint", "MultiPolygon"}
+        raw = (
+            spark.read.format("arcgis_http_pushdown").option("url", url)
+            .option("pagesize", 100).load()
+            .filter(F.col("geom_type").isin(*kinds))
+        )
+        out = incoming_chain(raw)
+        assert sorted(r["id"] for r in out.collect()) == expected_incoming_ids(feats, kinds)
+        wheres = {q.get("where") for (_, p, q) in srv.request_log if p == "/layer/query"}
+        assert any("geom_type IN" in (w or "") for w in wheres), wheres
+        out.select("id", "properties").write.format("arcgis_http").option(
+            "url", url
+        ).mode("append").save()
+        assert srv.submitted and all(
+            set(a["properties"]) == {"metadata"} and "callsign" in a["properties"]["metadata"]
+            for a in srv.submitted
+        )
+    finally:
+        srv.stop()
